@@ -52,6 +52,15 @@ def test_nested_spans_record_parents_and_requests():
     assert self_times(tr.spans) == {outer.id: 2.0, inner.id: 2.0}
 
 
+def test_nested_span_keeps_the_root_request():
+    tr = Tracer()
+    with tr.span("op.write", request="r3-merge"):
+        with tr.span("lake.merge", request="batch-3"):
+            pass
+    inner, outer = tr.spans
+    assert inner.request == outer.request == "r3-merge"
+
+
 def test_wrap_records_spans_and_restore_undoes_it():
     mod = types.SimpleNamespace(work=lambda x, batch_id=0: x * 2)
     original = mod.work

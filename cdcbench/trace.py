@@ -1,7 +1,7 @@
 """Spans around calls into the engine's layers, recorded from outside it.
 
 The traced run wraps public entry points of ``airbyte_spark`` at runtime
-(``Tracer.install``); nothing under ``airbyte_spark/`` carries a timer. Each
+(``install_engine_spans``); nothing under ``airbyte_spark/`` carries a timer. Each
 span records its name, start, end, parent span and request id (a trigger's
 ``batch_id`` or the benchmark op that caused it). Spans stay in memory and
 are written out once, when the run ends.
@@ -80,16 +80,18 @@ class Tracer:
         return self._local.stack
 
     @contextlib.contextmanager
-    def span(self, name: str, request: Optional[str] = None, **attrs):
+    def span(self, name: str, request: Optional[str] = None):
+        """Record a span; a nested span takes its parent's request id, so
+        ``request`` names only a root span's request."""
         if not self.enabled:
             yield None
             return
         stack = self._stack()
         parent = stack[-1] if stack else None
-        if request is None and parent is not None:
+        if parent is not None:
             request = parent.request
         s = Span(next(self._ids), parent.id if parent else None, name, request,
-                 self.clock(), attrs=dict(attrs))
+                 self.clock())
         stack.append(s)
         try:
             yield s
@@ -115,7 +117,7 @@ class Tracer:
         """Replace ``owner.attr`` with a spanned wrapper until ``restore``.
         ``on_call(span, args, kwargs, result)`` may add attributes from the
         call's public arguments and result; ``request_of`` names the request
-        when the span has no parent to inherit one from."""
+        of a root span (a trigger's ``foreachBatch`` call has no parent)."""
         orig = getattr(owner, attr)
 
         @functools.wraps(orig)
