@@ -5,7 +5,7 @@ Times are self times (a span's duration minus its child spans), except
 ``lake.table.compact_s`` and ``lake.table.vacuum_s``, which time the whole
 maintenance call; writes made under ``compact`` count as
 ``lake.table.bytes_rewritten``, not as ``lake.table.bytes_written``. Sums
-and times are per cycle (a sync, a backfill, or a serve round); counts of
+and times are per cycle (a sync or a serve round); counts of
 state are the mean of end-of-cycle values.
 """
 
@@ -15,8 +15,8 @@ from .eventlog import Counters
 from .trace import Span, self_times
 
 _WRITES = "write_p50_s; events_per_s"
-_EVERY_WRITER = "sync_stream, backfill, serve_mixed"
-_UDF = "events_per_s (backfill most), then write_p50_s"
+_EVERY_WRITER = "sync_stream, serve_mixed"
+_UDF = "events_per_s, then write_p50_s"
 
 #: metric -> (unit, end-to-end metric it should move, on which workload)
 LAYER_METRICS = {
@@ -47,12 +47,12 @@ LAYER_METRICS = {
     "lake.table.compact_s": ("s", "ops_per_s", "serve_mixed"),
     "lake.table.vacuum_s": ("s", "ops_per_s", "serve_mixed"),
     "lake.table.bytes_rewritten": ("bytes", "ops_per_s", "serve_mixed"),
-    "functions.udf_rows": ("count", _UDF, "backfill, sync_stream"),
-    "functions.udf_s": ("s", _UDF, "backfill, sync_stream"),
-    "functions.udf_bytes_sent": ("bytes", _UDF, "backfill, sync_stream"),
-    "functions.udf_boot_s": ("s", _UDF, "backfill, sync_stream"),
-    "operators.collapse_rows_in": ("count", "events_per_s", "backfill"),
-    "operators.collapse_rows_out": ("count", "events_per_s", "backfill"),
+    "functions.udf_rows": ("count", _UDF, _EVERY_WRITER),
+    "functions.udf_s": ("s", _UDF, _EVERY_WRITER),
+    "functions.udf_bytes_sent": ("bytes", _UDF, _EVERY_WRITER),
+    "functions.udf_boot_s": ("s", _UDF, _EVERY_WRITER),
+    "operators.collapse_rows_in": ("count", "events_per_s", _EVERY_WRITER),
+    "operators.collapse_rows_out": ("count", "events_per_s", _EVERY_WRITER),
     "spark.jobs": ("count", "write_p50_s", "sync_stream"),
     "spark.jobs_per_trigger": ("count", "write_p50_s", "sync_stream"),
     "spark.tasks": ("count", "events_per_s, ops_per_s", "all"),
@@ -60,10 +60,10 @@ LAYER_METRICS = {
     "spark.executor_cpu_s": ("s", "events_per_s, ops_per_s", "all"),
     "spark.gc_s": ("s", "events_per_s, ops_per_s", "all"),
     "spark.core_busy_frac": ("frac", "events_per_s, ops_per_s", "all"),
-    "spark.shuffle_write_bytes": ("bytes", "events_per_s", "backfill"),
-    "spark.spill_bytes": ("bytes", "events_per_s", "backfill"),
+    "spark.shuffle_write_bytes": ("bytes", "events_per_s", _EVERY_WRITER),
+    "spark.spill_bytes": ("bytes", "events_per_s", _EVERY_WRITER),
     "spark.scan_bytes": ("bytes", "scan_p50_s, read_p50_s", "serve_mixed"),
-    "trace.overhead_frac": ("frac", "traced wall / untraced wall - 1", "all"),
+    "trace.overhead_frac": ("frac", "traced wall / untraced wall - 1 (event log on in both)", "all"),
 }
 
 

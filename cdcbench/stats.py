@@ -22,11 +22,11 @@ def tail(values: Sequence[float]) -> tuple[float, float, int]:
 
     With ``n`` sorted samples that is the sample at index ``n - 11``: exactly
     ten samples lie above it, so it sits at percentile ``(n - 10) / n``.
-    When that percentile is below the median (``n < 2 * TAIL_BEYOND``) the
-    sample supports no tail at all and the median is returned with
-    percentile 0.5, so the reported tail never undercuts the p50."""
+    Up to ``n = 2 * TAIL_BEYOND`` that sample lies below the interpolated
+    median, so the sample supports no tail at all and the median is returned
+    with percentile 0.5: the reported tail never undercuts the p50."""
     n = len(values)
-    if n < 2 * TAIL_BEYOND:
+    if n <= 2 * TAIL_BEYOND:
         return p50(values), 0.5, n
     s = sorted(values)
     return float(s[n - TAIL_BEYOND - 1]), (n - TAIL_BEYOND) / n, n

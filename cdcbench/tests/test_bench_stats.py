@@ -24,10 +24,16 @@ def test_tail_falls_back_to_median_when_sample_is_small():
     assert tail([3.0]) == (3.0, 0.5, 1)
 
 
-def test_tail_at_the_smallest_supported_sample():
+def test_tail_falls_back_to_median_at_twenty_samples():
+    # 20 samples: the sample with ten beyond it (9) is below the median (9.5)
     values = list(range(20))
+    assert tail(values) == (9.5, 0.5, 20)
+
+
+def test_tail_at_the_smallest_supported_sample():
+    values = list(range(21))
     value, q, n = tail(values)
-    assert value == 9 and q == 0.5 and n == 20
+    assert value == 10 == p50(values) and q == 11 / 21 and n == 21
 
 
 def test_p50_rejects_empty():

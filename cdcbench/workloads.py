@@ -1,4 +1,4 @@
-"""The three workloads: closed loops with one driver client.
+"""The workloads: closed loops with one driver client.
 
 Each workload makes its feeds from the seed before anything is timed (the
 engine receives only the parquet segments), warms up on a small pass of the
@@ -263,58 +263,6 @@ class SyncStream:
                     "write", p["durationMs"]["triggerExecution"] / 1000.0, problem)
 
 
-# ------------------------------------------------------------------ backfill
-
-
-class Backfill:
-    """The ``job --backfill`` path through its public pieces:
-    ``bootstrap_table`` + one ``merge_batch`` of the whole feed into an empty
-    table, then a resolved scan of the result."""
-
-    name, DIR = "backfill", "backfill"
-    EVENTS = 4 * SyncStream.SEGMENT_EVENTS * SyncStream.SEGMENTS
-    SEGMENTS = 8
-    CYCLE_S = 3.5
-
-    def __init__(self, run: Run, seconds: int):
-        self.run = run
-        self.cycles = max(1, round(seconds / self.CYCLE_S))
-
-    def prepare(self) -> None:
-        self.feed = make_feed(self.run, "backfill", self.EVENTS, self.SEGMENTS)
-        self.want = final_state(self.feed.events)
-        self.warm = make_feed(self.run, "backfill-warm", 2_000, 1)
-        self.warm_want = final_state(self.warm.events)
-
-    def warm_up(self) -> None:
-        self._backfill(self.run.scratch(), self.warm, self.warm_want, "warm")
-
-    def cycle(self, i: int) -> None:
-        self._backfill(self.run, self.feed, self.want, f"c{i}")
-
-    def _backfill(self, run: Run, feed: Feed, want: pd.DataFrame, tag: str) -> None:
-        from airbyte_spark.lake import merge as lake_merge
-        from airbyte_spark.plans.replay import prepare_changes
-        from airbyte_spark.schemas import CHANGE_STRUCT, ORDER_COLS
-        from airbyte_spark.streaming.runner import bootstrap_table
-
-        path = fresh_dir(run, self.DIR, tag)
-        table = run.bootstrap(lambda: bootstrap_table(run.spark, path))
-        raw = run.spark.read.schema(CHANGE_STRUCT).parquet(f"{feed.dir}/*.parquet")
-        stats, dt = run.timed("write", f"backfill-{tag}", lambda: lake_merge.merge_batch(
-            table, raw, ORDER_COLS, app_id="cdcbench-backfill", batch_id=0,
-            post_collapse=prepare_changes,
-        ))
-        run.write_wall_s += dt
-        events = feed.events
-        run.events += len(events)
-        _, problem = _scan(run, path, f"scan-{tag}", want)
-        keys = n_keys(events)
-        if problem is None and stats.rows_in != keys:
-            problem = f"rows_in {stats.rows_in} != {keys} keys"
-        run.record("write", dt, problem)
-
-
 # --------------------------------------------------------------- serve_mixed
 
 
@@ -421,4 +369,4 @@ class ServeMixed:
         _scan(self.run, self.table.path, "final-scan", self.prefix_want[-1])
 
 
-WORKLOADS = {w.name: w for w in (SyncStream, Backfill, ServeMixed)}
+WORKLOADS = {w.name: w for w in (SyncStream, ServeMixed)}
