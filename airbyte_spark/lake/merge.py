@@ -26,6 +26,10 @@ Scale shape (the part that must survive 100 TB):
    AQE skew-join handles residual imbalance.
 4. Fence + adds/removes + lineage land in ONE atomic commit; a replayed
    batch_id is a no-op BEFORE any compute happens.
+5. The write (COW rewrite or MOR delta append) runs min(touched buckets,
+   cores) tasks, hash-partitioned on the bucket: the layout is still one
+   file per touched bucket, but a batch touching 32 buckets on 4 cores
+   pays 4 task launches, not 32.
 """
 
 from __future__ import annotations

@@ -39,6 +39,7 @@ connection owning its destination tables.
 from __future__ import annotations
 
 import threading
+from contextlib import contextmanager
 
 import json
 import os
@@ -111,12 +112,40 @@ class Snapshot:
         return self.schemas[self.current_schema_id]
 
 
-#: parquet timestamp-encoding conf guard (see write_data_files): one
-#: SparkSession per process, shared across concurrent lake writers
+#: session confs the lake pins around its own Spark calls (see
+#: _pinned_conf): one SparkSession per process, shared across concurrent
+#: lake writers and readers
 _TS_KEY = "spark.sql.parquet.outputTimestampType"
-_TS_CONF_LOCK = threading.Lock()
-_TS_CONF_DEPTH = 0
-_TS_CONF_PREV = None
+_LISTING_KEY = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+_PIN_LOCK = threading.Lock()
+#: conf key -> [open pins, value the session had before the outermost pin]
+_PINS: dict[str, list] = {}
+
+
+@contextmanager
+def _pinned_conf(spark: SparkSession, key: str, value: str):
+    """Hold a session-global SQL conf at ``value`` for the block, then give
+    the session back the value it had before — a user session that set
+    its own value must not have it silently hijacked after touching a
+    LakeTable. REFCOUNTED per key: concurrent lake calls in one session
+    (multi-stream sync's foreachBatch threads) overlap, and a plain
+    save/restore would let the first finisher flip an in-flight sibling
+    back. Only the OUTERMOST pin captures and restores."""
+    with _PIN_LOCK:
+        pin = _PINS.get(key)
+        if pin is None:
+            pin = _PINS[key] = [0, spark.conf.get(key)]
+            spark.conf.set(key, value)
+        pin[0] += 1
+    try:
+        yield
+    finally:
+        with _PIN_LOCK:
+            pin[0] -= 1
+            if pin[0] == 0:
+                del _PINS[key]
+                spark.conf.set(key, pin[1])
+
 
 class CommitConflict(RuntimeError):
     pass
@@ -763,14 +792,21 @@ class LakeTable:
         attached) under a fresh commit subdir; return (add-entries,
         total_rows).
 
-        Row counts come FROM THE WRITE JOB: either ``rows_per_bucket``
-        (the merge's stats aggregate, already computed) or an
-        ``Observation`` attached to the write plan — never from driver-side
-        parquet-footer reads. The post-write listing touches only this
-        commit's fresh subdirectory (O(files written this commit) — the
-        same driver cost any commit protocol pays), not the table.
-        ``kind`` is "base" (fully-resolved rows) or "delta" (merge-on-read
-        change files that the scan resolves by LSN)."""
+        The total row count comes FROM THE WRITE JOB: either
+        ``rows_per_bucket`` (the merge's stats aggregate, already computed)
+        or an ``Observation`` attached to the write plan. Each file's
+        ``rows`` comes from the footer the driver reads anyway for the
+        file's stats. The post-write listing touches only this commit's
+        fresh subdirectory (O(files written this commit) — the same driver
+        cost any commit protocol pays), not the table.
+
+        ``n_out_partitions`` (the number of buckets written) hash-partitions
+        the rows on ``_b`` into ``min(n_out_partitions, cores)`` write
+        tasks: each bucket lands in exactly one task, so the layout is
+        still one file per bucket, while the write pays one task per core
+        instead of one per bucket. ``kind`` is "base" (fully-resolved rows)
+        or "delta" (merge-on-read change files that the scan resolves by
+        LSN)."""
         from pyspark.sql import Observation
 
         sub = uuid.uuid4().hex
@@ -781,7 +817,10 @@ class LakeTable:
             obs = Observation()
             writer = writer.observe(obs, F.count(F.lit(1)).alias("rows"))
         if n_out_partitions:
-            writer = writer.repartition(n_out_partitions, "_b")
+            n_tasks = min(
+                n_out_partitions, self.spark.sparkContext.defaultParallelism
+            )
+            writer = writer.repartition(n_tasks, "_b")
         if sort_within:
             # table sort order (compaction-time): leading "_b" keeps each
             # output file's rows contiguous per bucket and clustered on
@@ -792,26 +831,9 @@ class LakeTable:
         # column statistics, which would silence event-time data skipping;
         # TIMESTAMP_MICROS is the modern stats-bearing encoding. The
         # setting is session-global (the parquet writer ignores it as a
-        # per-write option), so it is save/restored around the write — a
-        # user session that configured its own encoding must not have it
-        # silently hijacked for its OWN writes after touching a LakeTable.
-        # REFCOUNTED: concurrent lake writers in one session (multi-stream
-        # sync's foreachBatch threads) overlap; a plain save/restore would
-        # let the first finisher flip an in-flight sibling back to INT96.
-        # Only the OUTERMOST writer captures and restores.
-        with _TS_CONF_LOCK:
-            global _TS_CONF_DEPTH, _TS_CONF_PREV
-            if _TS_CONF_DEPTH == 0:
-                _TS_CONF_PREV = self.spark.conf.get(_TS_KEY)
-                self.spark.conf.set(_TS_KEY, "TIMESTAMP_MICROS")
-            _TS_CONF_DEPTH += 1
-        try:
+        # per-write option), so it is pinned for the write only.
+        with _pinned_conf(self.spark, _TS_KEY, "TIMESTAMP_MICROS"):
             writer.write.partitionBy("_b").parquet(out, compression="zstd")
-        finally:
-            with _TS_CONF_LOCK:
-                _TS_CONF_DEPTH -= 1
-                if _TS_CONF_DEPTH == 0:
-                    self.spark.conf.set(_TS_KEY, _TS_CONF_PREV)
         total: Optional[int] = None
         if obs is not None:
             try:
@@ -830,8 +852,6 @@ class LakeTable:
                     per_bucket_files.setdefault(bucket, []).append(
                         (f2.path, f2.stat().st_size)
                     )
-        known = rows_per_bucket or {}
-        n_files = sum(len(v) for v in per_bucket_files.values())
         # per-bucket pk blooms for point-lookup skipping (opt-in): ONE
         # distributed columnar re-read of this commit's fresh files (pk
         # cols only — never a driver-side row scan, never a recompute of
@@ -844,17 +864,11 @@ class LakeTable:
         adds = []
         for bucket, paths in per_bucket_files.items():
             for p, nbytes in paths:
-                if len(paths) == 1 and bucket in known:
-                    rows = known[bucket]
-                elif n_files == 1 and total is not None:
-                    rows = total
-                else:
-                    rows = None  # split across files unknown; totals tracked in lineage
-                # per-file cursor + stats-column bounds for read-time data
-                # skipping — ONE footer-only read of the file this commit
-                # just wrote (same O(files-this-commit) driver cost as the
-                # listing above; row counts still come from the write job)
-                st = _footer_col_stats(p, [META_LSN, *snap.stats_cols])
+                # per-file row count, cursor + stats-column bounds for
+                # read-time data skipping — ONE footer-only read of the
+                # file this commit just wrote (same O(files-this-commit)
+                # driver cost as the listing above)
+                rows, st = _footer_stats(p, [META_LSN, *snap.stats_cols])
                 lsn_b = st.get(META_LSN)
                 ad = {
                     "path": os.path.relpath(p, self.path),
@@ -1338,7 +1352,12 @@ class LakeTable:
         struct = file_schema.to_struct()
         # meta cols are physical in every data file
         read_struct = struct.add(META_LSN, "long").add(META_DELETED, "boolean")
-        raw = self.spark.read.schema(read_struct).parquet(*paths)
+        # the commit log already names every file, so there is nothing to
+        # discover: above the threshold (32 paths) Spark would otherwise
+        # run a distributed listing job, one task per path, before the
+        # scan — the per-file fixed cost that dominates small MOR reads
+        with _pinned_conf(self.spark, _LISTING_KEY, str(2**31 - 1)):
+            raw = self.spark.read.schema(read_struct).parquet(*paths)
         by_uid = file_schema.by_uid()
         cols = []
         for fs in cur.fields:
@@ -2031,9 +2050,11 @@ def _stat_value(v):
     return None  # unorderable/unknown type ⇒ no bound
 
 
-def _footer_col_stats(path: str, cols: Sequence[str]) -> dict[str, tuple]:
-    """Per-file (min, max) for the requested columns from the parquet
-    FOOTER — one few-KB metadata read, no data pages touched (Delta
+def _footer_stats(
+    path: str, cols: Sequence[str]
+) -> tuple[Optional[int], dict[str, tuple]]:
+    """Per-file (row count, {col: (min, max)}) for the requested columns
+    from the parquet FOOTER — one few-KB metadata read, no data pages touched (Delta
     collects the same stats in the write transaction; reading the footer
     the writer just produced is the PySpark-reachable equivalent).
     Columns that are absent or stat-less (e.g. INT96 timestamps — which
@@ -2044,7 +2065,7 @@ def _footer_col_stats(path: str, cols: Sequence[str]) -> dict[str, tuple]:
     try:
         md = pq.read_metadata(path)
     except Exception:
-        return {}
+        return None, {}
     idx = {}
     for i in range(md.num_columns):
         nm = md.schema.column(i).name
@@ -2067,15 +2088,7 @@ def _footer_col_stats(path: str, cols: Sequence[str]) -> dict[str, tuple]:
             hi = smx if hi is None else max(hi, smx)
         if ok and lo is not None:
             out[nm] = (lo, hi)
-    return out
-
-
-def _footer_lsn_stats(path: str) -> tuple[Optional[int], Optional[int]]:
-    """Back-compat shim: (min, max) of ``__lsn`` via ``_footer_col_stats``."""
-    st = _footer_col_stats(path, [META_LSN]).get(META_LSN)
-    if st is None:
-        return None, None
-    return int(st[0]), int(st[1])
+    return md.num_rows, out
 
 
 def _typed(df: DataFrame) -> DataFrame:

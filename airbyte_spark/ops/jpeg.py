@@ -35,6 +35,12 @@ import struct
 
 import numpy as np
 
+#: decode size limits checked right after SOF: libjpeg's JPEG_MAX_DIMENSION
+#: per side, and a total-pixel bound (~67 MP, well above 8K video frames)
+#: that keeps the float64 planes and the per-MCU loop bounded
+MAX_JPEG_SIDE = 65500
+MAX_JPEG_PIXELS = 1 << 26
+
 # --------------------------------------------------------------- tables
 
 #: zigzag scan order: ZIGZAG[k] = natural (row-major) index of the k-th
@@ -528,6 +534,12 @@ def decode_jpeg(payload: bytes) -> np.ndarray:
             prec, h, w, nc = _unpack(">BHHB", data, 0)
             if prec != 8:
                 raise ValueError("only 8-bit JPEG samples supported")
+            # a hostile header must fail here, not as a MemoryError when
+            # the planes are allocated or after a multi-million-MCU loop
+            if h > MAX_JPEG_SIDE or w > MAX_JPEG_SIDE or h * w > MAX_JPEG_PIXELS:
+                raise ValueError(
+                    f"JPEG frame {w}x{h} exceeds the decoder's size limit"
+                )
             if nc not in (1, 3):
                 raise ValueError(
                     f"{nc}-component JPEG (CMYK/Adobe?) unsupported — "

@@ -29,7 +29,10 @@ class ReplayMetricsListener(StreamingQueryListener):
 
     # -- StreamingQueryListener interface ---------------------------------
     def onQueryStarted(self, event):
-        pass
+        # re-arm for a reused listener: the previous query's terminated
+        # event must not satisfy a wait on this one. Spark delivers
+        # QueryStarted synchronously, before ``start()`` returns.
+        self._terminated.clear()
 
     def onQueryProgress(self, event):
         p = event.progress
@@ -76,7 +79,8 @@ class ReplayMetricsListener(StreamingQueryListener):
         ``awaitTermination`` returns MUST wait here first: query
         termination on the driver races the async listener delivery, and
         the row most likely to be missing is the final batch's — exactly
-        the one a drift check cares about."""
+        the one a drift check cares about. Each query start re-arms the
+        wait, so one listener can serve several runs in turn."""
         return self._terminated.wait(timeout)
 
     # -- convenience ------------------------------------------------------

@@ -126,6 +126,20 @@ def test_four_component_frame_rejected_by_name():
         J.decode_jpeg(payload)
 
 
+def test_oversized_frame_rejected_before_allocation():
+    """A header claiming 65535x65535 (~34 GB per float64 plane) fails with
+    the size ValueError at SOF, not as a MemoryError at plane allocation;
+    a frame under the per-side limit but over the pixel bound fails too."""
+    for h, w in [(65535, 65535), (65500, 65500), (4096, 65500)]:
+        sof = struct.pack(">BHHB", 8, h, w, 1) + struct.pack(">BBB", 1, 0x11, 0)
+        payload = (
+            b"\xff\xd8" + struct.pack(">HH", 0xFFC0, len(sof) + 2) + sof
+            + b"\xff\xda" + struct.pack(">HBBB", 8, 1, 1, 0) + b"\x00\x3f\x00"
+        )
+        with pytest.raises(ValueError, match="size limit"):
+            J.decode_jpeg(payload)
+
+
 def test_quality_monotonicity():
     """Higher quality ⇒ no-worse reconstruction on smooth content (the
     IJG scaling is implemented in the right direction)."""

@@ -45,3 +45,40 @@ def test_listener_counts_match_feed(spark, tmp_path, tmp_path_factory):
         assert obs["max_lsn_obs"] == int(lin["max_lsn"].max())
     finally:
         detach(spark, lst)
+
+
+def test_reused_listener_waits_for_each_query(spark, tmp_path):
+    """One listener, two bounded (availableNow) runs: the first run's
+    terminated event must not satisfy the wait on the second, and once
+    the wait returns, the second run's final batch is in ``progress``."""
+    import threading
+
+    src = str(tmp_path / "src")
+    spark.range(10).coalesce(1).write.parquet(src)
+    gate = threading.Event()
+
+    def sink(df, batch_id):
+        gate.wait(30)
+        df.count()
+
+    lst = attach(spark)
+    try:
+        for run in range(2):
+            gate.clear()
+            q = (
+                spark.readStream.schema("id long").parquet(src)
+                .writeStream.foreachBatch(sink)
+                .option("checkpointLocation", str(tmp_path / f"ck{run}"))
+                .trigger(availableNow=True)
+                .queryName(f"reuse-{run}")
+                .start()
+            )
+            # the query is blocked inside its only batch: nothing may
+            # report it terminated yet
+            assert not lst.wait_terminated(0.5)
+            gate.set()
+            q.awaitTermination(60)
+            assert lst.wait_terminated(30.0)
+            assert lst.totals(name=f"reuse-{run}")["rows"] == 10
+    finally:
+        detach(spark, lst)
